@@ -6,12 +6,16 @@ truncates the anchor query to 64 tokens (~170 ms → ~10 ms per search,
 bm25_backend.rs:213-219), searches top-32, and rotates the top-3 per anchor
 (constants.rs:134-154). Here the same semantics are DataFrame math:
 
-- **index** = an inverted ``(source, term, doc_id, tf)`` postings frame +
-  per-doc lengths + per-source stats (N, avgdl) + per-term df/idf — all
-  partial-aggregable, partitioned by ``source``, incrementally maintainable
-  by recomputing only refreshed sources (bm25_backend.rs:343-390);
-- **scoring** = explode query terms → equi-join postings on (source, term)
-  → groupBy (anchor, doc) sum — the classic DAAT-by-join plan;
+- **index** (:func:`build_bm25_index`) = an inverted ``(source, term,
+  doc_id, tf)`` postings frame + per-doc lengths + each doc's query terms —
+  analyzed once, partitioned by ``source``, incrementally maintainable by
+  recomputing only refreshed sources (:func:`refresh_bm25_index`,
+  bm25_backend.rs:343-390);
+- **scoring** (:func:`bm25_topk_from_index`, the ONE scoring path) =
+  per-source stats (N, avgdl) + per-term df/idf, then query terms →
+  equi-join postings on (source, term) → groupBy (anchor, doc) sum — the
+  classic DAAT-by-join plan. The one-shot :func:`bm25_topk` builds a fresh
+  index and serves it;
 - **rotation** = ``variant % min(TOP_ROTATE, hits)`` arithmetic instead of
   the reference's per-(anchor, split) cursor state.
 
@@ -26,11 +30,9 @@ Scale guards (both engines, part of the spec):
   quadratic join cost, so they are dropped from the postings join.
 
 Determinism: each PER-TERM contribution ``idf × tf_part`` is quantized to
-the 1e-9 grid as an int64 (``floor(term × QSCALE + 0.5)`` — half-up round
-written as floor because Spark's Round on doubles allocates a BigDecimal
-per row, measured ~1.5× on the hit join; contributions are positive and
-both engines use the identical floor expression) and the per-(query,
-doc) score is the EXACT integer sum of those — order-free, so the score is
+the 1e-9 grid as an int64 (``floor(term × QSCALE + 0.5)``, a half-up
+round; why floor, at the expression) and the per-(query, doc) score is
+the EXACT integer sum of those — order-free, so the score is
 bit-identical run-to-run at any parallelism AND across engines (the same
 trick the similarity kernels use). A double sum would drift with Spark's
 partial-aggregation order: at sf1 a single (qid, did) group landed on
@@ -51,6 +53,8 @@ cost here is data-shape-intrinsic, not a plan defect.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -88,106 +92,6 @@ def analyze_sql(text_sql: str) -> str:
     )
 
 
-def bm25_scores(
-    docs: DataFrame,
-    id_col: str,
-    source_col: str,
-    text_col: str,
-    split_col: str | None = None,
-) -> DataFrame:
-    """Score every (query-doc, candidate-doc) pair within a source via
-    BM25, query truncated to the first ``BM25_QUERY_TOKEN_LIMIT`` distinct
-    analyzed terms. Returns (qid, did, score) for hits only; ``score`` is
-    the exact int64 sum of per-term contributions on the 1/QSCALE grid
-    (module doc) — divide by ``QSCALE`` for the float score."""
-    base = docs.select(
-        F.col(id_col).cast("long").alias("did"),
-        F.col(source_col).alias("source"),
-        *( [F.col(split_col).alias("split")] if split_col else [] ),
-        analyze_col(text_col).alias("__terms"),
-    )
-    # base: consumed by postings, stats, and queries — analyze once;
-    # postings: consumed by the score join and df_stats. Scoped caches:
-    # a repeat call releases the previous generation's blocks.
-    base = cache_scoped(base, "bm25.base")
-    # dl rides along in the postings key (functionally determined by did):
-    # the per-hit frame then never joins a doc-length side at all.
-    # split rides along too (when given) so the split-isolation filter
-    # applies BEFORE the hit-scale join instead of after aggregation —
-    # same surviving (qid, did) groups, ~sum(split_share²) of the rows.
-    postings = cache_scoped(
-        base.select(
-            "did", "source",
-            *( [F.col("split").alias("__psplit")] if split_col else [] ),
-            F.size("__terms").cast("long").alias("dl"),
-            F.explode("__terms").alias("term"),
-        )
-        .groupBy("source", "term", "did", "dl",
-                 *( ["__psplit"] if split_col else [] ))
-        .agg(F.count("*").cast("long").alias("tf")),
-        "bm25.postings",
-    )
-    src_stats = base.groupBy("source").agg(
-        F.count("*").cast("long").alias("N"),
-        F.avg(F.size("__terms").cast("double")).alias("avgdl"),
-    )
-    df_stats = postings.groupBy("source", "term").agg(
-        F.count("*").cast("long").alias("df")
-    )
-    queries = base.select(
-        F.col("did").alias("qid"),
-        F.col("source"),
-        *( [F.col("split").alias("qsplit")] if split_col else [] ),
-        # slice THEN distinct: the resulting term SET is order-independent
-        # (DuckDB's list_distinct does not preserve order, so distinct-then-
-        # slice would not be cross-engine stable)
-        F.explode(
-            F.array_distinct(F.slice("__terms", 1, BM25_QUERY_TOKEN_LIMIT))
-        ).alias("term"),
-    )
-    # idf inputs attach to the SMALL per-query-term side, and stop terms are
-    # pruned BEFORE the big postings join — the hit-scale frame (query-term ×
-    # postings-list) is joined exactly once and carries only arithmetic
-    q_terms = (
-        queries.join(df_stats, ["source", "term"], "inner")
-        .join(F.broadcast(src_stats), "source")
-        .where(
-            F.col("df").cast("double")
-            <= F.lit(STOP_TERM_DF_RATIO) * F.col("N").cast("double")
-        )
-    )
-    idf = F.log(
-        (F.col("N").cast("double") - F.col("df").cast("double") + F.lit(0.5))
-        / (F.col("df").cast("double") + F.lit(0.5))
-        + F.lit(1.0)
-    )
-    q_terms = q_terms.withColumn("__idf", idf)
-    joined = q_terms.join(postings, ["source", "term"], "inner")
-    if split_col:
-        joined = joined.where(F.col("qsplit") == F.col("__psplit"))
-    tf_part = (
-        F.col("tf").cast("double") * F.lit(K1 + 1.0)
-    ) / (
-        F.col("tf").cast("double")
-        + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl").cast("double") / F.col("avgdl"))
-    )
-    group_cols = ["qid", "did"] + (["qsplit"] if split_col else [])
-    # per-term quantize THEN exact integer sum — order-free (module doc)
-    return (
-        joined.withColumn(
-            # floor(x + 0.5), NOT F.round: Spark's Round on doubles allocates
-            # a BigDecimal PER ROW (measured ~1.5x on the hit-scale join at
-            # sf0.1); floor is codegen-native. Contributions are strictly
-            # positive, and the twin uses the identical floor form, so the
-            # two engines shift together on any half-grid edge.
-            "__s",
-            F.floor(F.col("__idf") * tf_part * F.lit(float(QSCALE)) + F.lit(0.5)).cast("long")
-        )
-        .groupBy(*group_cols)
-        .agg(F.sum("__s").alias("score"))
-    )
-
-
 def bm25_topk(
     docs: DataFrame,
     id_col: str,
@@ -196,21 +100,10 @@ def bm25_topk(
     split_col: str | None = None,
     k: int = BM25_SEARCH_TOP_K,
 ) -> DataFrame:
-    """Top-k BM25 candidates per query doc (self excluded, split-isolated
-    when ``split_col`` given — the backend's wrong-split drop,
-    bm25_backend.rs:243-249). Returns (qid, rank, did, score_q)."""
-    scores = bm25_scores(docs, id_col, source_col, text_col, split_col)
-    scores = scores.where(F.col("qid") != F.col("did"))
-    # split isolation already applied inside bm25_scores (pre-join filter);
-    # rank on the exact integer score, report score_q = score / QSCALE
-    score_q = F.col("score").cast("double") / F.lit(float(QSCALE))
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("did").asc())
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", F.col("rank").cast("long").alias("rank"), "did",
-                score_q.alias("score_q"))
-    )
+    """One-shot top-k: :func:`bm25_topk_from_index` over
+    ``build_bm25_index(docs, …)``. Returns (qid, rank, did, score_q)."""
+    index = build_bm25_index(docs, id_col, source_col, text_col, split_col)
+    return bm25_topk_from_index(index, k)
 
 
 def bm25_hard_negative(
@@ -345,9 +238,6 @@ WHERE rank = pick
 # remainder is never re-analyzed)
 # ---------------------------------------------------------------------------
 
-from dataclasses import dataclass  # noqa: E402
-
-
 @dataclass(frozen=True)
 class Bm25Index:
     """Materialized BM25 index state, everything partitioned by ``source``:
@@ -383,8 +273,14 @@ def build_bm25_index(
         *([F.col(split_col).alias("split")] if split_col else []),
         analyze_col(text_col).alias("__terms"),
     )
+    # base feeds postings, doclens and qterms — analyze once (scoped cache:
+    # a repeat call releases the previous generation's blocks)
     base = cache_scoped(base, "bm25.index.base")
     split_cols = ["split"] if split_col else []
+    # dl rides along in the postings key (functionally determined by did):
+    # the per-hit frame then never joins a doc-length side at all. split
+    # rides along too, so split isolation applies AT the hit-scale join
+    # instead of after aggregation (~sum(split_share²) of the rows)
     postings = (
         base.select(
             "did", "source", *split_cols,
@@ -401,6 +297,9 @@ def build_bm25_index(
         F.col("source"),
         F.col("did").alias("qid"),
         *split_cols,
+        # slice THEN distinct: the resulting term SET is order-independent
+        # (DuckDB's list_distinct does not preserve order, so distinct-then-
+        # slice would not be cross-engine stable)
         F.explode(
             F.array_distinct(F.slice("__terms", 1, BM25_QUERY_TOKEN_LIMIT))
         ).alias("term"),
@@ -443,10 +342,11 @@ def refresh_bm25_index(
 
 
 def bm25_topk_from_index(index: Bm25Index, k: int = BM25_SEARCH_TOP_K) -> DataFrame:
-    """Top-k BM25 candidates per query doc served FROM the maintained
-    index — same stats, same stop-term pruning, same rounding, and
-    therefore bit-identical scores to :func:`bm25_topk` over the
-    equivalent corpus (pytest-pinned)."""
+    """Top-k BM25 candidates per query doc, scored from ``index`` — THE
+    BM25 scoring path (:func:`bm25_topk` is this over a fresh index).
+    Self excluded; split-isolated when the index was built with a split
+    column (the backend's wrong-split drop, bm25_backend.rs:243-249).
+    Returns (qid, rank, did, score_q), ranked on the exact integer score."""
     split = index.split_isolated
     # the postings frame feeds BOTH df_stats and the hit join: for a
     # freshly-built (or freshly-refreshed) index its lineage is the whole
@@ -461,6 +361,9 @@ def bm25_topk_from_index(index: Bm25Index, k: int = BM25_SEARCH_TOP_K) -> DataFr
     df_stats = index_postings.groupBy("source", "term").agg(
         F.count("*").cast("long").alias("df")
     )
+    # idf inputs attach to the SMALL per-query-term side, and stop terms are
+    # pruned BEFORE the big postings join — the hit-scale frame (query-term ×
+    # postings-list) is joined exactly once and carries only arithmetic
     q_terms = (
         index.qterms.join(df_stats, ["source", "term"], "inner")
         .join(F.broadcast(src_stats), "source")
@@ -490,12 +393,13 @@ def bm25_topk_from_index(index: Bm25Index, k: int = BM25_SEARCH_TOP_K) -> DataFr
         + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl").cast("double") / F.col("avgdl"))
     )
     scores = (
+        # per-term quantize THEN exact integer sum — order-free. floor(x +
+        # 0.5), NOT F.round: Spark's Round on doubles allocates a BigDecimal
+        # PER ROW (measured ~1.5x on the hit-scale join at sf0.1); floor is
+        # codegen-native. Contributions are strictly positive, and the twin
+        # uses the identical floor form, so the two engines shift together
+        # on any half-grid edge.
         joined.withColumn(
-            # floor(x + 0.5), NOT F.round: Spark's Round on doubles allocates
-            # a BigDecimal PER ROW (measured ~1.5x on the hit-scale join at
-            # sf0.1); floor is codegen-native. Contributions are strictly
-            # positive, and the twin uses the identical floor form, so the
-            # two engines shift together on any half-grid edge.
             "__s",
             F.floor(F.col("__idf") * tf_part * F.lit(float(QSCALE)) + F.lit(0.5)).cast("long")
         )

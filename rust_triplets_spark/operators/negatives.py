@@ -75,18 +75,15 @@ SRC_SEED_OFF = 606  # source ordering within a split
 
 NULL_DATE = "§null§"
 
-# auto-salting policy (salt_buckets="auto", the default): the rank pass
-# buckets on hash31(source) — constant per source — so ONE dominant
-# (split, source) pool runs its whole window in one task. Salting fans a
-# pool out over sub-buckets of the next order component with row-for-row
-# identical output (pytest-pinned), so "auto" is a STATIC fan-out (r12):
-# every pool splits over up to AUTO_SALT_BUCKETS window tasks, and the
-# decision costs zero jobs. (Through r11 "auto" instead probed the largest
-# pool with a groupBy-count at every plan build — a full extra pass over
-# the pool lineage per query construction, guide §1.2.) 64 buckets ×
-# ~4M comfortable rows per window task ≈ 256M rows per source before a
-# single task exceeds the comfort bound — past that, callers pass an
-# explicit count.
+# skew salting: the rank pass buckets on hash31(source) — constant per
+# source — so ONE dominant (split, source) pool would run its whole window
+# in one task. Every pool is therefore fanned out over up to
+# AUTO_SALT_BUCKETS sub-buckets of the next order component, with output
+# row-for-row identical to the unsalted rank (pytest-pinned against the
+# DuckDB twin). The fan-out is static, so it costs zero jobs at plan build
+# (a counting probe would re-run the pool lineage per query construction).
+# 64 buckets × ~4M comfortable rows per window task ≈ 256M rows per source
+# before a single task exceeds the comfort bound.
 AUTO_SALT_BUCKETS = 64
 
 STRATEGIES = ("wrong_article", "wrong_publication_date", "qa_mismatch")
@@ -110,24 +107,16 @@ def negative_pick(
     seed: int = 42,
     variant: int = 0,
     id_is_string: bool = True,
-    salt_buckets: int | str | None = "auto",
 ) -> DataFrame:
     """One negative per anchor row. Returns ``(id, negative_id, tier)``.
 
-    ``salt_buckets``: skew fan-out for the ranking pass. The rank buckets
-    on ``hash31(source)`` — constant per source — so ONE dominant source
-    concentrates its whole row mass in one window task. With salting, the
-    bucket id becomes the exact order prefix plus a range bucket of
-    ``hash31(id)`` (the next order component), so a dominant source fans
-    out over up to ``salt_buckets`` tasks while the output stays
-    row-for-row IDENTICAL (pytest-pinned:
-    tests/test_sampling.py::test_negative_pick_salted_equals_unsalted).
-
-    ``"auto"`` (the default) applies the static ``AUTO_SALT_BUCKETS``
-    fan-out: zero plan-build jobs, identical rows to the unsalted plan
-    (pytest-pinned), and a dominant source at scale still fans out with no
-    caller opt-in. Pass an int to size the fan-out explicitly, or ``None``
-    for the plain unsalted rank."""
+    The ranking pass is skew-salted: the rank buckets on ``hash31(source)``
+    — constant per source — so the bucket id becomes the exact order
+    prefix plus a range bucket of ``hash31(id)`` (the next order
+    component), and a dominant source fans out over up to
+    ``AUTO_SALT_BUCKETS`` window tasks while the output stays row-for-row
+    identical to the unsalted rank of :func:`negative_pick_sql`
+    (pytest-pinned: tests/test_sampling.py)."""
     if strategy not in STRATEGIES:
         raise ValueError(f"unknown strategy {strategy!r}")
     if strategy == "wrong_publication_date" and not date_col:
@@ -154,22 +143,6 @@ def negative_pick(
         "__srck", hash31_col(strfold_col("source"), seed + SRC_SEED_OFF)
     ).withColumn("__oh", hash31_col(F.col("__idf"), seed + POOL_SEED_OFF))
 
-    if salt_buckets == "auto":
-        # r12: static fan-out instead of the counting probe. The probe was
-        # a full groupBy-count job over the pool lineage at EVERY plan
-        # build (guide §1.2 — an extra pass computing something thrown
-        # away): on derived pools (triplet assemblies aggregate the
-        # sections frame first) it re-ran the whole upstream pipeline
-        # before the real query even started. Salted output is row-for-row
-        # identical at ANY bucket count (pytest-pinned), so a fixed salt
-        # keeps the skew guarantee — a dominant source fans out over up to
-        # AUTO_SALT_BUCKETS window tasks — while the decision costs zero
-        # jobs. The price is the counts frame growing to (splits × sources
-        # × salt) rows, broadcast-sized for any real source cardinality.
-        salt_buckets = AUTO_SALT_BUCKETS
-    elif isinstance(salt_buckets, str):
-        raise ValueError(f"salt_buckets must be an int, None, or 'auto', got {salt_buckets!r}")
-
     # hierarchical order within split; for wrong_date the per-source order
     # is additionally date-bucket-contiguous (bucket hash before datek)
     tiebreak = ["source"]
@@ -186,21 +159,14 @@ def negative_pick(
     # pool side of the pick join — cache so the rank pipeline runs once.
     # salt: sub-bucket on __oh (the uniform per-record hash, the next order
     # component after the per-source-constant prefix) — see docstring.
-    salt_kw = (
-        {
-            "salt_col": "__oh",
-            "salt_prefix": tiebreak[: tiebreak.index("__oh")],
-            "n_salt": salt_buckets,
-        }
-        if salt_buckets
-        else {}
-    )
     ranked = cache_scoped(
         bucketed_position(
             base, "__srck", tiebreak, part_cols=["split"],
-            out_col="__grn", count_col="__ns", **salt_kw,
+            out_col="__grn", count_col="__ns",
+            salt_col="__oh", salt_prefix=tiebreak[: tiebreak.index("__oh")],
+            n_salt=AUTO_SALT_BUCKETS,
         ),
-        f"negatives.{strategy}.ranked.salt{salt_buckets or 0}",
+        f"negatives.{strategy}.ranked",
     )
 
     # tier range stats: one pass over the ranked frame, broadcast back.

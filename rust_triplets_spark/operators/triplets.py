@@ -3,11 +3,16 @@ reference's primary query path (``next_triplet_batch``,
 src/sampler/mod.rs:2444-2626) re-expressed as one Catalyst-planned job:
 
 records → windows (chunker) → split column → distinct anchor/positive chunk
-pair per record → strategy negative (indexed-pool pick) → 50% deterministic
-anchor/positive swap → weight model → degenerate rejection. The reference's
-(a,p,n) record-id dedup is structural here: every stage is 1:1 per record,
-so each anchor id appears exactly once (no dropDuplicates needed — and the
-SQL twins stay literally equivalent).
+pair per record → strategy negative (indexed-pool pick) → finish step. Each
+assembly (chunk pair, TemporalOffset neighbour, per-side selectors) only
+chooses its anchor and positive chunks; all of them then run ONE shared
+finish step, :func:`_finish_triplets` — negative join, 50% deterministic
+anchor/positive swap, weight model, output projection, degenerate
+rejection — as every reference recipe runs the same tail
+(src/sampler/mod.rs:1329-1387, :1442-1468). The reference's (a,p,n)
+record-id dedup is structural here: every stage is 1:1 per record, so each
+anchor id appears exactly once (no dropDuplicates needed — and the SQL
+twins stay literally equivalent).
 
 Key mappings:
 
@@ -37,9 +42,10 @@ split).
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from rust_triplets_spark.functions.caching import cache_scoped
@@ -168,6 +174,139 @@ def _trust_sql(idf_sql: str) -> str:
     return f"(0.5 + (CAST({hash31_sql(idf_sql, TRUST_SEED)} AS DOUBLE) / {float(M31)!r}) * 0.5)"
 
 
+def _ranked_windows(
+    records: DataFrame,
+    id_col: str,
+    source_col: str,
+    text_col: str,
+    chunking: ChunkingStrategy,
+    seed: int,
+    variant: int,
+    ratios: tuple[float, float, float],
+    id_is_string: bool = False,
+    extra: Sequence[Column] = (),
+    carry: Sequence[str] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """Shared preamble of the one-section assemblies: project ``records``
+    to (record_id, section_idx, source, text, trust, split, __idf, *extra),
+    chunk it, keep the window views, and rank each record's windows in the
+    seeded ``CHUNK_SEED_OFF`` order (``__crn``). ``carry`` names the
+    ``extra`` columns the chunks keep. Returns (records, ranked windows)."""
+    idf = strfold_col(F.col(id_col)) if id_is_string else F.col(id_col).cast("long")
+    recs = records.select(
+        F.col(id_col).alias("record_id"),
+        F.lit(0).alias("section_idx"),
+        F.col(source_col).alias("source"),
+        F.col(text_col).alias("text"),
+        _trust_col(idf).cast("double").alias("trust"),
+        split_label_col(id_col, seed, ratios, id_is_string).alias("split"),
+        idf.alias("__idf"),
+        *extra,
+    )
+    chunks = chunk_sections(
+        recs,
+        chunking,
+        text_col="text",
+        carry_cols=("record_id", "section_idx", "source", "split", "trust", "__idf", *carry),
+    ).where(F.col("view_kind") == "window")
+    order_key = mix31_col(
+        [F.col("__idf"), F.col("win_index"), F.col("overlap"), F.lit(variant)],
+        seed + CHUNK_SEED_OFF,
+    )
+    w_rec = Window.partitionBy("record_id").orderBy(order_key.asc(), F.col("chunk_key").asc())
+    return recs, chunks.withColumn("__crn", F.row_number().over(w_rec))
+
+
+def _weight_floor(chunking: ChunkingStrategy | None) -> float:
+    """Chunk-weight floor: the chunking strategy's, or the reference
+    default 0.1 for whole-section chunks (selector assembly without
+    chunking)."""
+    return float(chunking.chunk_weight_floor) if chunking is not None else 0.1
+
+
+def _finish_triplets(
+    pair: DataFrame,
+    neg: DataFrame,
+    neg_chunk: DataFrame,
+    recipe: TripletRecipe,
+    chunking: ChunkingStrategy | None,
+    seed: int,
+    variant: int,
+) -> DataFrame:
+    """The finish step every assembly shares (src/sampler/mod.rs:1329-1387,
+    :1442-1468): negative join → 50% seeded swap → weight model → output
+    projection → degenerate rejection.
+
+    ``pair`` carries record_id, source, split, trust, __idf, the anchor
+    chunk (anchor_key, anchor_text, __a_idx window index, __a_rid owning
+    record) and the positive chunk (positive_key, positive_text, __p_idx,
+    __p_rid, __p_trust — the positive may belong to another record, e.g. a
+    TemporalOffset neighbour, whose trust then weights it). ``neg`` is the
+    strategy pick (id, negative_id, tier); ``neg_chunk`` is
+    (negative_id, negative_key, negative_text, __n_trust)."""
+    trip = (
+        pair.join(neg.withColumnRenamed("id", "record_id"), "record_id", "inner")
+        .join(neg_chunk, "negative_id", "inner")
+    )
+
+    swap_coin = F.pmod(
+        mix31_col([F.col("__idf"), F.lit(variant)], seed + SWAP_SEED_OFF), F.lit(2)
+    )
+    trip = trip.withColumn("swapped", (swap_coin == 0).cast("long"))
+
+    # chunk_w = max(floor, 1/(win+1) * clamp(trust)) per side, anchor and
+    # positive scaled by the window-distance proximity; whole-section chunks
+    # have win 0 on both sides, so base 1 and proximity 1
+    floor = _weight_floor(chunking)
+
+    def clamp(c):
+        return F.greatest(F.lit(0.0), F.least(F.col(c), F.lit(1.0)))
+
+    base_a = F.lit(1.0) / (F.col("__a_idx").cast("double") + F.lit(1.0))
+    base_p = F.lit(1.0) / (F.col("__p_idx").cast("double") + F.lit(1.0))
+    d = F.abs(F.col("__a_idx") - F.col("__p_idx")).cast("double")
+    prox = F.lit(1.0) - d / (d + F.lit(1.0))
+    aw = F.greatest(F.lit(floor), F.greatest(F.lit(floor), base_a * clamp("trust")) * prox)
+    pw = F.greatest(F.lit(floor), F.greatest(F.lit(floor), base_p * clamp("__p_trust")) * prox)
+    nw = F.greatest(F.lit(floor), clamp("__n_trust"))
+    weight = F.lit(float(recipe.weight)) * ((aw + pw + nw) / F.lit(3.0))
+
+    def side(swapped: str, kept: str) -> Column:
+        return F.when(F.col("swapped") == 1, F.col(swapped)).otherwise(F.col(kept))
+
+    # the swap exchanges the WHOLE anchor/positive identity, ids included:
+    # on swapped rows the anchor slot holds the positive side's chunk, so
+    # it carries that chunk's record id
+    out = trip.select(
+        F.lit(recipe.name).alias("recipe"),
+        side("__p_rid", "__a_rid").alias("anchor_id"),
+        side("positive_key", "anchor_key").alias("anchor_key"),
+        side("positive_text", "anchor_text").alias("anchor_text"),
+        side("__a_rid", "__p_rid").alias("positive_id"),
+        side("anchor_key", "positive_key").alias("positive_key"),
+        side("anchor_text", "positive_text").alias("positive_text"),
+        F.col("negative_id"),
+        F.col("negative_key"),
+        F.col("negative_text"),
+        weight.alias("weight"),
+        F.col("swapped"),
+        F.col("tier"),
+        F.lit(recipe.instruction).cast("string").alias("instruction"),
+        F.col("split"),
+    )
+    if not recipe.allow_same_anchor_positive:
+        out = out.where(F.col("anchor_text") != F.col("positive_text"))
+    # the reference's (a,p,n) record-id dedup (src/sampler/mod.rs:2604-2611)
+    # is structural: every stage is 1:1 per record_id, so each anchor
+    # appears once. No dropDuplicates — the SQL twins have none, and a
+    # dedup over a nondeterministic pick would silently diverge the engines
+    # if a stage ever became multi-row.
+    return out.where(
+        (F.col("negative_text") != F.col("anchor_text"))
+        & (F.col("negative_text") != F.col("positive_text"))
+    )
+
+
 def assemble_triplets(
     records: DataFrame,
     id_col: str,
@@ -180,47 +319,23 @@ def assemble_triplets(
     ratios: tuple[float, float, float] = (0.8, 0.1, 0.1),
     date_col: str | None = None,
     id_is_string: bool = False,
-    trust_col: str | None = None,
 ) -> DataFrame:
     """Full triplet assembly over a one-section-per-record corpus."""
-    idf = (
-        strfold_col(F.col(id_col)) if id_is_string else F.col(id_col).cast("long")
-    )
-    recs = records.select(
-        F.col(id_col).alias("record_id"),
-        F.lit(0).alias("section_idx"),
-        F.col(source_col).alias("source"),
-        F.col(text_col).alias("text"),
-        (F.col(trust_col) if trust_col else _trust_col(idf)).cast("double").alias("trust"),
-        split_label_col(id_col, seed, ratios, id_is_string).alias("split"),
-        idf.alias("__idf"),
-        *( [F.col(date_col).alias("__date")] if date_col else [] ),
-    )
-
-    chunks = chunk_sections(
-        recs,
-        chunking,
-        text_col="text",
-        carry_cols=(
-            "record_id", "section_idx", "source", "split", "trust", "__idf",
-            *( ["__date"] if date_col else [] ),
-        ),
-    ).where(F.col("view_kind") == "window")
-
-    order_key = mix31_col(
-        [F.col("__idf"), F.col("win_index"), F.col("overlap"), F.lit(variant)],
-        seed + CHUNK_SEED_OFF,
-    )
-    w_rec = Window.partitionBy("record_id").orderBy(order_key.asc(), F.col("chunk_key").asc())
-    ranked = chunks.withColumn("__crn", F.row_number().over(w_rec)).withColumn(
-        "__ccnt", F.count("*").over(Window.partitionBy("record_id"))
+    dates = ["__date"] if date_col else []
+    _, ranked = _ranked_windows(
+        records, id_col, source_col, text_col, chunking, seed, variant, ratios,
+        id_is_string, extra=[F.col(date_col).alias("__date")] if date_col else [],
+        carry=dates,
     )
     # the ranked-chunks frame feeds anchors (rn=1), positives (rn=2), and
     # the negative's chunk lookup — cache so the scan+chunk+rank pipeline
     # runs once instead of once per consumer (the reference recomputes
     # chunks on every access, src/sampler/mod.rs:1765-1773). Scoped cache:
     # a repeat call releases the previous generation's blocks.
-    ranked = cache_scoped(ranked, "triplets.ranked")
+    ranked = cache_scoped(
+        ranked.withColumn("__ccnt", F.count("*").over(Window.partitionBy("record_id"))),
+        "triplets.ranked",
+    )
 
     pick = ranked.where(F.col("__ccnt") >= 2)
     anchors = pick.where(F.col("__crn") == 1).select(
@@ -235,84 +350,39 @@ def assemble_triplets(
         F.col("chunk_text").alias("positive_text"),
         F.col("win_index").alias("__p_idx"),
     )
-    pair = anchors.join(positives, "record_id", "inner")
+    # both chunks belong to the anchor record
+    pair = anchors.join(positives, "record_id", "inner").select(
+        "*",
+        F.col("record_id").alias("__a_rid"),
+        F.col("record_id").alias("__p_rid"),
+        F.col("trust").alias("__p_trust"),
+    )
 
     # negative pool = ALL chunked records in the split (the reference draws
     # negatives from every record regardless of chunk count,
     # src/sampler/mod.rs:995-1151) — not just records that produced an
-    # anchor/positive pair, so short single-chunk records can be negatives
-    rec_pool = ranked.where(F.col("__crn") == 1).select(
-        F.col("record_id").alias("id"), "source", "split",
-        *( ["__date"] if date_col else [] ),
-    )
+    # anchor/positive pair, so short single-chunk records can be negatives.
     # date_col threads through to the strategy: wrong_publication_date
     # requires it, and a dated wrong_article upgrades to the
     # same_source_same_date preference tier
+    rep = ranked.where(F.col("__crn") == 1)
     neg = negative_pick(
-        rec_pool, "id", "source", "split", recipe.negative_strategy,
+        rep.select(F.col("record_id").alias("id"), "source", "split", *dates),
+        "id", "source", "split", recipe.negative_strategy,
         date_col="__date" if date_col else None,
         seed=seed, variant=variant, id_is_string=id_is_string,
     )
-    neg_chunk = ranked.where(F.col("__crn") == 1).select(
+    neg_chunk = rep.select(
         F.col("record_id").alias("negative_id"),
         F.col("chunk_key").alias("negative_key"),
         F.col("chunk_text").alias("negative_text"),
         F.col("trust").alias("__n_trust"),
     )
-    trip = (
-        pair.join(neg.withColumnRenamed("id", "record_id"), "record_id", "inner")
-        .join(neg_chunk, "negative_id", "inner")
+    # anchor_id is the record id on both sides of the swap; the chunk-pair
+    # schema has no positive_id
+    return _finish_triplets(pair, neg, neg_chunk, recipe, chunking, seed, variant).drop(
+        "positive_id"
     )
-
-    # 50% deterministic swap (src/sampler/mod.rs:1329-1370)
-    swap_coin = F.pmod(
-        mix31_col([F.col("__idf"), F.lit(variant)], seed + SWAP_SEED_OFF), F.lit(2)
-    )
-    trip = trip.withColumn("swapped", (swap_coin == 0).cast("long"))
-
-    floor = float(chunking.chunk_weight_floor)
-    trust_c = F.greatest(F.lit(0.0), F.least(F.col("trust"), F.lit(1.0)))
-    n_trust_c = F.greatest(F.lit(0.0), F.least(F.col("__n_trust"), F.lit(1.0)))
-    base_a = F.lit(1.0) / (F.col("__a_idx").cast("double") + F.lit(1.0))
-    base_p = F.lit(1.0) / (F.col("__p_idx").cast("double") + F.lit(1.0))
-    d = F.abs(F.col("__a_idx") - F.col("__p_idx")).cast("double")
-    prox = F.lit(1.0) - d / (d + F.lit(1.0))
-    chunk_w_a = F.greatest(F.lit(floor), base_a * trust_c)
-    chunk_w_p = F.greatest(F.lit(floor), base_p * trust_c)
-    aw = F.greatest(F.lit(floor), chunk_w_a * prox)
-    pw = F.greatest(F.lit(floor), chunk_w_p * prox)
-    nw = F.greatest(F.lit(floor), n_trust_c)
-    weight = F.lit(float(recipe.weight)) * ((aw + pw + nw) / F.lit(3.0))
-
-    out = trip.select(
-        F.lit(recipe.name).alias("recipe"),
-        F.col("record_id").alias("anchor_id"),
-        F.when(F.col("swapped") == 1, F.col("positive_key")).otherwise(F.col("anchor_key")).alias("anchor_key"),
-        F.when(F.col("swapped") == 1, F.col("positive_text")).otherwise(F.col("anchor_text")).alias("anchor_text"),
-        F.when(F.col("swapped") == 1, F.col("anchor_key")).otherwise(F.col("positive_key")).alias("positive_key"),
-        F.when(F.col("swapped") == 1, F.col("anchor_text")).otherwise(F.col("positive_text")).alias("positive_text"),
-        F.col("negative_id"),
-        F.col("negative_key"),
-        F.col("negative_text"),
-        weight.alias("weight"),
-        F.col("swapped"),
-        F.col("tier"),
-        F.lit(recipe.instruction).cast("string").alias("instruction"),
-        F.col("split"),
-    )
-    if not recipe.allow_same_anchor_positive:
-        out = out.where(F.col("anchor_text") != F.col("positive_text"))
-    out = out.where(
-        (F.col("negative_text") != F.col("anchor_text"))
-        & (F.col("negative_text") != F.col("positive_text"))
-    )
-    # the reference's (a,p,n) record-id dedup (src/sampler/mod.rs:2604-2611)
-    # is structurally satisfied here: every join stage is 1:1 per record_id
-    # (anchor rn=1, positive rn=2, one negative pick), so each anchor_id
-    # appears exactly once. No dropDuplicates — the SQL twin has none, and a
-    # dedup over a nondeterministic pick would silently diverge the engines
-    # if a stage ever became multi-row (both sides now emit the same rows).
-    return out
 
 
 def assemble_triplets_sql(
@@ -438,7 +508,6 @@ def assemble_temporal_triplets(
     seed: int = 42,
     variant: int = 0,
     ratios: tuple[float, float, float] = (0.8, 0.1, 0.1),
-    ts_is_epoch: bool = True,
 ) -> DataFrame:
     """Triplet assembly with a ``Selector::TemporalOffset`` positive
     (src/config.rs:200-215; execution src/sampler/mod.rs:950-976,
@@ -446,9 +515,9 @@ def assemble_temporal_triplets(
     of the same (source, split) to ``created_at + offset_days`` — never
     crossing split boundaries — then that neighbor's representative chunk
     (the reference's Context-role pick reduced to the ranked window chunk
-    for this one-section corpus). Negative strategy, 50% swap, weight
-    model, degenerate rejection, and dedup are identical to
-    :func:`assemble_triplets`.
+    for this one-section corpus). ``ts_col`` holds epoch seconds. The
+    negative, swap, weights and degenerate rejection are the shared finish
+    step (:func:`_finish_triplets`).
 
     Scale: neighbor selection is the distributed insertion-point as-of
     join (operators/asof.py — two sorts + a 4x equi-join, no per-group
@@ -456,125 +525,48 @@ def assemble_temporal_triplets(
     anchor/positive/negative lookups via a scoped cache."""
     from rust_triplets_spark.operators.asof import asof_nearest
 
-    idf = F.col(id_col).cast("long")
-    recs = records.select(
-        F.col(id_col).alias("record_id"),
-        F.lit(0).alias("section_idx"),
-        F.col(source_col).alias("source"),
-        F.col(text_col).alias("text"),
-        _trust_col(idf).cast("double").alias("trust"),
-        split_label_col(id_col, seed, ratios).alias("split"),
-        idf.alias("__idf"),
-        F.col(ts_col).alias("__ts"),
+    recs, ranked = _ranked_windows(
+        records, id_col, source_col, text_col, chunking, seed, variant, ratios,
+        extra=[F.col(ts_col).alias("__ts")],
     )
-
-    chunks = chunk_sections(
-        recs,
-        chunking,
-        text_col="text",
-        carry_cols=(
-            "record_id", "section_idx", "source", "split", "trust", "__idf",
-        ),
-    ).where(F.col("view_kind") == "window")
-    order_key = mix31_col(
-        [F.col("__idf"), F.col("win_index"), F.col("overlap"), F.lit(variant)],
-        seed + CHUNK_SEED_OFF,
-    )
-    w_rec = Window.partitionBy("record_id").orderBy(order_key.asc(), F.col("chunk_key").asc())
-    ranked = cache_scoped(
-        chunks.withColumn("__crn", F.row_number().over(w_rec)).where(F.col("__crn") == 1),
-        "triplets.temporal.rep",
-    )
+    rep = cache_scoped(ranked.where(F.col("__crn") == 1), "triplets.temporal.rep")
 
     neighbor = asof_nearest(
         recs, "record_id", "__ts", "source", split_col="split",
-        offset_days=offset_days, ts_is_epoch=ts_is_epoch,
+        offset_days=offset_days, ts_is_epoch=True,
     ).select(F.col("id").alias("record_id"), F.col("neighbor_id"))
 
-    anchors = ranked.select(
+    anchors = rep.select(
         "record_id", "source", "split", "trust", "__idf",
         F.col("chunk_key").alias("anchor_key"),
         F.col("chunk_text").alias("anchor_text"),
         F.col("win_index").alias("__a_idx"),
+        F.col("record_id").alias("__a_rid"),
     )
-    pos_chunk = ranked.select(
-        F.col("record_id").alias("neighbor_id"),
+    # the positive chunk belongs to the NEIGHBOR record: its id and trust
+    pos_chunk = rep.select(
+        F.col("record_id").alias("__p_rid"),
         F.col("chunk_key").alias("positive_key"),
         F.col("chunk_text").alias("positive_text"),
         F.col("win_index").alias("__p_idx"),
-        # the positive chunk belongs to the NEIGHBOR record — its weight
-        # must clamp the neighbor's trust, not the anchor's (weight spec:
-        # chunk_w uses the chunk's own record's trust)
         F.col("trust").alias("__p_trust"),
     )
     pair = anchors.join(neighbor, "record_id", "inner").join(
-        pos_chunk, "neighbor_id", "inner"
+        pos_chunk, F.col("neighbor_id") == F.col("__p_rid"), "inner"
     )
 
-    rec_pool = ranked.select(F.col("record_id").alias("id"), "source", "split")
     neg = negative_pick(
-        rec_pool, "id", "source", "split", recipe.negative_strategy,
+        rep.select(F.col("record_id").alias("id"), "source", "split"),
+        "id", "source", "split", recipe.negative_strategy,
         date_col=None, seed=seed, variant=variant, id_is_string=False,
     )
-    neg_chunk = ranked.select(
+    neg_chunk = rep.select(
         F.col("record_id").alias("negative_id"),
         F.col("chunk_key").alias("negative_key"),
         F.col("chunk_text").alias("negative_text"),
         F.col("trust").alias("__n_trust"),
     )
-    trip = (
-        pair.join(neg.withColumnRenamed("id", "record_id"), "record_id", "inner")
-        .join(neg_chunk, "negative_id", "inner")
-    )
-
-    swap_coin = F.pmod(
-        mix31_col([F.col("__idf"), F.lit(variant)], seed + SWAP_SEED_OFF), F.lit(2)
-    )
-    trip = trip.withColumn("swapped", (swap_coin == 0).cast("long"))
-
-    floor = float(chunking.chunk_weight_floor)
-    trust_c = F.greatest(F.lit(0.0), F.least(F.col("trust"), F.lit(1.0)))
-    p_trust_c = F.greatest(F.lit(0.0), F.least(F.col("__p_trust"), F.lit(1.0)))
-    n_trust_c = F.greatest(F.lit(0.0), F.least(F.col("__n_trust"), F.lit(1.0)))
-    base_a = F.lit(1.0) / (F.col("__a_idx").cast("double") + F.lit(1.0))
-    base_p = F.lit(1.0) / (F.col("__p_idx").cast("double") + F.lit(1.0))
-    d = F.abs(F.col("__a_idx") - F.col("__p_idx")).cast("double")
-    prox = F.lit(1.0) - d / (d + F.lit(1.0))
-    aw = F.greatest(F.lit(floor), F.greatest(F.lit(floor), base_a * trust_c) * prox)
-    pw = F.greatest(F.lit(floor), F.greatest(F.lit(floor), base_p * p_trust_c) * prox)
-    nw = F.greatest(F.lit(floor), n_trust_c)
-    weight = F.lit(float(recipe.weight)) * ((aw + pw + nw) / F.lit(3.0))
-
-    # the swap exchanges the WHOLE anchor/positive identity — ids included;
-    # keys/texts without ids left half the rows with mismatched lineage
-    out = trip.select(
-        F.lit(recipe.name).alias("recipe"),
-        F.when(F.col("swapped") == 1, F.col("neighbor_id")).otherwise(F.col("record_id")).alias("anchor_id"),
-        F.when(F.col("swapped") == 1, F.col("positive_key")).otherwise(F.col("anchor_key")).alias("anchor_key"),
-        F.when(F.col("swapped") == 1, F.col("positive_text")).otherwise(F.col("anchor_text")).alias("anchor_text"),
-        F.when(F.col("swapped") == 1, F.col("record_id")).otherwise(F.col("neighbor_id")).alias("positive_id"),
-        F.when(F.col("swapped") == 1, F.col("anchor_key")).otherwise(F.col("positive_key")).alias("positive_key"),
-        F.when(F.col("swapped") == 1, F.col("anchor_text")).otherwise(F.col("positive_text")).alias("positive_text"),
-        F.col("negative_id"),
-        F.col("negative_key"),
-        F.col("negative_text"),
-        weight.alias("weight"),
-        F.col("swapped"),
-        F.col("tier"),
-        F.lit(recipe.instruction).cast("string").alias("instruction"),
-        F.col("split"),
-    )
-    if not recipe.allow_same_anchor_positive:
-        out = out.where(F.col("anchor_text") != F.col("positive_text"))
-    out = out.where(
-        (F.col("negative_text") != F.col("anchor_text"))
-        & (F.col("negative_text") != F.col("positive_text"))
-    )
-    # no dropDuplicates: every stage (rep chunk rn=1, as-of neighbor,
-    # negative pick) is 1:1 per record_id, and the SQL twin carries no
-    # dedup — keeping the two plans literally equivalent (see
-    # assemble_triplets) instead of masking a future multi-row divergence.
-    return out
+    return _finish_triplets(pair, neg, neg_chunk, recipe, chunking, seed, variant)
 
 
 def assemble_temporal_triplets_sql(
@@ -589,7 +581,6 @@ def assemble_temporal_triplets_sql(
     seed: int = 42,
     variant: int = 0,
     ratios: tuple[float, float, float] = (0.8, 0.1, 0.1),
-    ts_is_epoch: bool = True,
 ) -> str:
     """DuckDB twin of :func:`assemble_temporal_triplets` — same as-of
     insertion-point algorithm (asof_nearest_sql) window-for-window."""
@@ -606,7 +597,7 @@ def assemble_temporal_triplets_sql(
     order_key = mix31_sql(["idf", "win_index", "overlap", str(variant)], seed + CHUNK_SEED_OFF)
     asof_sql = asof_nearest_sql(
         table, id_sql, ts_sql, source_sql, split_sql=split_expr,
-        offset_days=offset_days, ts_is_epoch=ts_is_epoch,
+        offset_days=offset_days, ts_is_epoch=True,
     )
     neg_sql = negative_pick_sql(
         "(SELECT record_id AS id, source, split FROM rep)",
@@ -954,7 +945,6 @@ def assemble_selector_triplets(
     seed: int = 42,
     variant: int = 0,
     ratios: tuple[float, float, float] = (0.8, 0.1, 0.1),
-    floor: float | None = None,
     chunking: "ChunkingStrategy | None" = None,
     ts_col: str | None = None,
 ) -> DataFrame:
@@ -969,9 +959,9 @@ def assemble_selector_triplets(
     SAME record by their selectors; the negative RECORD comes from the
     negative strategy (same-source pool + same-split fallback tiers, split
     isolation enforced by :func:`negative_pick`); the negative CHUNK is the
-    negative selector applied to that record. 50% deterministic swap,
-    whole-section chunk weights (win_index 0 ⇒ proximity 1), degenerate
-    rejection — identical contract to :func:`assemble_triplets`.
+    negative selector applied to that record. Swap, weights (whole-section
+    chunks have win_index 0 ⇒ proximity 1) and degenerate rejection are the
+    shared finish step (:func:`_finish_triplets`).
 
     A ``Paragraph(n)`` side on a record with fewer sections drops that
     record *for this recipe only* (inner-join semantics — the reference's
@@ -981,10 +971,6 @@ def assemble_selector_triplets(
     anchor_sel = recipe.anchor or RANDOM
     positive_sel = recipe.positive_selector or RANDOM
     negative_sel = recipe.negative_selector or RANDOM
-    if floor is None:
-        # derive from the strategy like the other assemblies (divergence
-        # between entry points was a reviewed bug); 0.1 = reference default
-        floor = float(chunking.chunk_weight_floor) if chunking is not None else 0.1
 
     idf = F.col("record_id").cast("long")
     base = sections.select(
@@ -1014,19 +1000,16 @@ def assemble_selector_triplets(
         "record_id", "source", "split", "trust", "__idf",
         F.col("sel_key").alias("anchor_key"),
         F.col("sel_text").alias("anchor_text"),
-        F.col("sel_win").alias("__a_win"),
+        F.col("sel_win").alias("__a_idx"),
         F.col("chunk_record_id").alias("__a_rid"),
     )
     # the positive side carries its OWN chunk-owner id and trust: for a
-    # TemporalOffset positive the chunk belongs to the as-of neighbor, so
-    # weighting it by the anchor record's trust (and losing the neighbor
-    # id from the output) was the same weight/lineage bug fixed earlier
-    # in assemble_temporal_triplets
+    # TemporalOffset positive the chunk belongs to the as-of neighbor
     p = _select_section(base, positive_sel, "positive", seed, chunking, variant).select(
         "record_id",
         F.col("sel_key").alias("positive_key"),
         F.col("sel_text").alias("positive_text"),
-        F.col("sel_win").alias("__p_win"),
+        F.col("sel_win").alias("__p_idx"),
         F.col("chunk_record_id").alias("__p_rid"),
         F.col("trust").alias("__p_trust"),
     )
@@ -1049,61 +1032,7 @@ def assemble_selector_triplets(
         F.col("sel_text").alias("negative_text"),
         F.col("trust").alias("__n_trust"),
     )
-    trip = (
-        pair.join(neg.withColumnRenamed("id", "record_id"), "record_id", "inner")
-        .join(nsel, "negative_id", "inner")
-    )
-
-    swap_coin = F.pmod(
-        mix31_col([F.col("__idf"), F.lit(variant)], seed + SWAP_SEED_OFF), F.lit(2)
-    )
-    trip = trip.withColumn("swapped", (swap_coin == 0).cast("long"))
-
-    # full chunk-weight model (src/sampler/mod.rs:106-122): base weight
-    # 1/(win+1), proximity over window-index distance. Whole-section
-    # chunks have win 0 on both sides ⇒ base 1 and proximity 1, so the
-    # short-section case reduces to the trust-only weights exactly.
-    trust_c = F.greatest(F.lit(0.0), F.least(F.col("trust"), F.lit(1.0)))
-    p_trust_c = F.greatest(F.lit(0.0), F.least(F.col("__p_trust"), F.lit(1.0)))
-    n_trust_c = F.greatest(F.lit(0.0), F.least(F.col("__n_trust"), F.lit(1.0)))
-    base_a = F.lit(1.0) / (F.col("__a_win").cast("double") + F.lit(1.0))
-    base_p = F.lit(1.0) / (F.col("__p_win").cast("double") + F.lit(1.0))
-    d = F.abs(F.col("__a_win") - F.col("__p_win")).cast("double")
-    prox = F.lit(1.0) - d / (d + F.lit(1.0))
-    aw = F.greatest(F.lit(floor), F.greatest(F.lit(floor), base_a * trust_c) * prox)
-    pw = F.greatest(F.lit(floor), F.greatest(F.lit(floor), base_p * p_trust_c) * prox)
-    nw = F.greatest(F.lit(floor), n_trust_c)
-    weight = F.lit(float(recipe.weight)) * ((aw + pw + nw) / F.lit(3.0))
-
-    out = trip.select(
-        F.lit(recipe.name).alias("recipe"),
-        # the swap exchanges WHOLE identities — ids included (the same
-        # lineage contract assemble_temporal_triplets pins): on swapped
-        # rows the anchor slot holds the positive side's chunk, so it
-        # carries that chunk's record id; positive_id names the other
-        # side. For non-temporal selectors both rids equal record_id,
-        # so those values are unchanged.
-        F.when(F.col("swapped") == 1, F.col("__p_rid")).otherwise(F.col("__a_rid")).alias("anchor_id"),
-        F.when(F.col("swapped") == 1, F.col("positive_key")).otherwise(F.col("anchor_key")).alias("anchor_key"),
-        F.when(F.col("swapped") == 1, F.col("positive_text")).otherwise(F.col("anchor_text")).alias("anchor_text"),
-        F.when(F.col("swapped") == 1, F.col("__a_rid")).otherwise(F.col("__p_rid")).alias("positive_id"),
-        F.when(F.col("swapped") == 1, F.col("anchor_key")).otherwise(F.col("positive_key")).alias("positive_key"),
-        F.when(F.col("swapped") == 1, F.col("anchor_text")).otherwise(F.col("positive_text")).alias("positive_text"),
-        F.col("negative_id"),
-        F.col("negative_key"),
-        F.col("negative_text"),
-        weight.alias("weight"),
-        F.col("swapped"),
-        F.col("tier"),
-        F.lit(recipe.instruction).cast("string").alias("instruction"),
-        F.col("split"),
-    )
-    if not recipe.allow_same_anchor_positive:
-        out = out.where(F.col("anchor_text") != F.col("positive_text"))
-    return out.where(
-        (F.col("negative_text") != F.col("anchor_text"))
-        & (F.col("negative_text") != F.col("positive_text"))
-    )
+    return _finish_triplets(pair, neg, nsel, recipe, chunking, seed, variant)
 
 
 def assemble_selector_triplets_sql(
@@ -1112,7 +1041,6 @@ def assemble_selector_triplets_sql(
     seed: int = 42,
     variant: int = 0,
     ratios: tuple[float, float, float] = (0.8, 0.1, 0.1),
-    floor: float | None = None,
     chunking: "ChunkingStrategy | None" = None,
     has_ts: bool = False,
 ) -> str:
@@ -1123,10 +1051,6 @@ def assemble_selector_triplets_sql(
     anchor_sel = recipe.anchor or RANDOM
     positive_sel = recipe.positive_selector or RANDOM
     negative_sel = recipe.negative_selector or RANDOM
-    if floor is None:
-        # derive from the strategy like the other assemblies (divergence
-        # between entry points was a reviewed bug); 0.1 = reference default
-        floor = float(chunking.chunk_weight_floor) if chunking is not None else 0.1
     if not has_ts and "temporal" in {
         anchor_sel.kind, positive_sel.kind, negative_sel.kind
     }:
@@ -1144,7 +1068,7 @@ def assemble_selector_triplets_sql(
         seed=seed, variant=variant, id_is_string=False,
     )
     swap_coin = f"({mix31_sql(['a.idf', str(variant)], seed + SWAP_SEED_OFF)} % 2)"
-    fl = f"{float(floor)!r}"
+    fl = f"{_weight_floor(chunking)!r}"
     trust_c = "greatest(0.0, least(a.trust, 1.0))"
     p_trust_c = "greatest(0.0, least(p.p_trust, 1.0))"
     n_trust_c = "greatest(0.0, least(nc.trust, 1.0))"

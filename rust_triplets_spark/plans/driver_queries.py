@@ -616,8 +616,7 @@ SELECT recipe, CAST(anchor_id AS BIGINT) AS anchor_id, anchor_key, anchor_text,
 FROM ({assemble_temporal_triplets_sql(
     "(SELECT doc_id, source, text, " + _DOC_TS_SQL + " AS created_s FROM documents)",
     "doc_id", "source", "text", "created_s",
-    _TEMPORAL_RECIPE, _CHUNK_STRAT, offset_days=30, seed=SEED, variant=0,
-    ts_is_epoch=True)})
+    _TEMPORAL_RECIPE, _CHUNK_STRAT, offset_days=30, seed=SEED, variant=0)})
 """,
 )
 def temporal_offset_triplets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -625,7 +624,6 @@ def temporal_offset_triplets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = assemble_temporal_triplets(
         docs, "doc_id", "source", "text", "created_s",
         _TEMPORAL_RECIPE, _CHUNK_STRAT, offset_days=30, seed=SEED, variant=0,
-        ts_is_epoch=True,
     )
     return out.select(
         "recipe",

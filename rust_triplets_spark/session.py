@@ -14,6 +14,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """min(16g, half of physical memory). Not "most of the box": G1 grows
+    toward the ceiling before collecting (measured: fuzzy_decontamination
+    at sf0.1 took 46.8 s at 90g, ~10-12 s at 8-16g), and on a small machine
+    the JVM shares memory with its Python workers. sf0.1 needs well under
+    4g; larger runs set SPARK_GRAFT_DRIVER_MEM. Local mode only."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    except (ValueError, OSError, AttributeError):
+        return "16g"
+    return f"{min(16 << 10, half_mb)}m"
+
+
 def get_spark(app_name: str = "rust_triplets_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -35,15 +48,8 @@ def get_spark(app_name: str = "rust_triplets_spark", cpus: int | None = None) ->
         # side, the exact 100 TB OOM profile the r12 advice flagged.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 16g, NOT "most of the box": G1 grows toward the ceiling before
-        # collecting, so a 90g ceiling on a 128 GiB box let the old gen
-        # balloon and every allocation-heavy query paid multi-second mixed
-        # collections (guide §5 — measured r12: fuzzy_decontamination min-of-3
-        # at sf0.1 was 46.8 s @90g / 26.9 s @48g / 12.2 s @24g / ~10-12 s
-        # @8-16g; flat below 24g). sf0.1 needs well under 4g; sf1 campaigns
-        # can raise via SPARK_GRAFT_DRIVER_MEM. On a real cluster executor
-        # memory is sized separately per §5 — this default is local-mode only.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -123,29 +123,6 @@ def test_incremental_refresh_equals_full_rebuild(spark):
     assert got == want and got
 
 
-def test_index_serving_matches_direct_bm25_topk(spark):
-    """The index-served path and the one-shot bm25_topk are the same math:
-    identical (qid, rank, did, score_q) rows, split isolation included."""
-    from rust_triplets_spark.operators.bm25 import (
-        bm25_topk_from_index, build_bm25_index,
-    )
-    from rust_triplets_spark.operators.splits import split_label_col
-
-    docs = spark.createDataFrame(_corpus_rows(0), "id long, source string, text string")
-    docs = docs.withColumn("split", split_label_col("id", 42))
-    direct = {
-        (r["qid"], r["rank"]): (r["did"], r["score_q"])
-        for r in bm25_topk(docs, "id", "source", "text", "split", k=4).collect()
-    }
-    served = {
-        (r["qid"], r["rank"]): (r["did"], r["score_q"])
-        for r in bm25_topk_from_index(
-            build_bm25_index(docs, "id", "source", "text", "split"), k=4
-        ).collect()
-    }
-    assert served == direct and served
-
-
 def test_bm25_refresh_keeps_null_source_rows(spark):
     """NOT isin(...) is NULL for a NULL source key — the keep filter must
     pass NULL-source rows through (same contract as the minhash index)."""

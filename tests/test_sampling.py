@@ -431,38 +431,49 @@ def test_temporal_swap_exchanges_ids_with_texts(spark):
     assert swapped_seen
 
 
-def test_negative_pick_salted_equals_unsalted(spark):
-    """Skew salting (salt_buckets) must be a pure parallelism knob: the
-    picked negatives are row-for-row identical, while the dominant
-    source's rows fan out over >1 rank bucket (= >1 window task)."""
-    from rust_triplets_spark.functions.hashing import M31, hash31_py, strfold_py
-    from rust_triplets_spark.operators.negatives import POOL_SEED_OFF
+_SKEW_CASES = [
+    ("wrong_article", "datec"),
+    ("wrong_publication_date", "datec"),
+    ("qa_mismatch", None),
+]
 
-    # one dominant source: 90% of rows in 'big'
+
+def _skewed_pool(spark):
+    """120 records, one dominant source: 90% of rows in 'big'."""
     rows = []
     for i in range(120):
         src = "big" if i % 10 else f"tiny{i % 3}"
         split = "test" if i % 17 == 0 else "train"
         date = f"2024-0{1 + (i % 3)}" if i % 4 else None
         rows.append((f"r{i}", src, split, date))
-    df = spark.createDataFrame(rows, "id string, source string, split string, datec string")
+    return spark.createDataFrame(rows, "id string, source string, split string, datec string")
 
-    cases = [
-        ("wrong_article", "datec"),
-        ("wrong_publication_date", "datec"),
-        ("qa_mismatch", None),
-    ]
-    for strategy, date_col in cases:
-        base = negative_pick(df, "id", "source", "split", strategy, date_col=date_col)
-        salted = negative_pick(
-            df, "id", "source", "split", strategy, date_col=date_col, salt_buckets=8
-        )
-        key = lambda r: r["id"]
-        assert sorted(base.collect(), key=key) == sorted(salted.collect(), key=key), strategy
+
+def test_negative_pick_salted_equals_unsalted(spark):
+    """Skew salting is a pure parallelism knob: the salted Spark pick is
+    row-for-row identical to the DuckDB twin's plain (unsalted) rank for
+    every strategy, while the dominant source's rows fan out over >1 rank
+    bucket (= >1 window task)."""
+    import duckdb
+
+    from rust_triplets_spark.functions.hashing import M31, hash31_py, strfold_py
+    from rust_triplets_spark.operators.negatives import (
+        AUTO_SALT_BUCKETS, POOL_SEED_OFF, negative_pick_sql,
+    )
+
+    df = _skewed_pool(spark)
+    con = duckdb.connect()
+    con.register("pool", df.toPandas())
+    for strategy, date_col in _SKEW_CASES:
+        got = negative_pick(df, "id", "source", "split", strategy, date_col=date_col)
+        want = con.execute(negative_pick_sql(
+            "pool", "id", "source", "split", strategy, date_sql=date_col,
+        )).fetchall()
+        assert sorted(map(tuple, got.collect())) == sorted(want), strategy
 
     # fan-out proof: the dominant source's salt buckets (hash31(id) div s)
     # span >1 value, so its rank window splits across >1 task partition
-    ssize = (M31 + 8 - 1) // 8
+    ssize = (M31 + AUTO_SALT_BUCKETS - 1) // AUTO_SALT_BUCKETS
     big_buckets = {
         hash31_py(strfold_py(f"r{i}"), 42 + POOL_SEED_OFF) // ssize
         for i in range(120)
@@ -472,47 +483,13 @@ def test_negative_pick_salted_equals_unsalted(spark):
 
 
 def test_negative_pick_auto_salt(spark):
-    """The 'auto' default (no caller opt-in) is a STATIC fan-out since r12:
-    it must (a) run zero Spark jobs at plan-build time (the r11 counting
-    probe re-ran the whole pool lineage per build), and (b) stay
-    row-for-row identical to the unsalted pick for every strategy."""
-    from rust_triplets_spark.operators import negatives as N
-
-    rows = []
-    for i in range(120):
-        src = "big" if i % 10 else f"tiny{i % 3}"
-        split = "test" if i % 17 == 0 else "train"
-        date = f"2024-0{1 + (i % 3)}" if i % 4 else None
-        rows.append((f"r{i}", src, split, date))
-    df = spark.createDataFrame(rows, "id string, source string, split string, datec string")
-
-    # (a) plan-build is job-free: the static policy never touches the data
+    """The salt is a STATIC fan-out: building the pick runs zero Spark
+    jobs for any strategy (a counting probe would re-run the whole pool
+    lineage per plan build)."""
+    df = _skewed_pool(spark)
     tracker = spark.sparkContext.statusTracker()
     ids_before = set(tracker.getJobIdsForGroup() or [])
-    auto = N.negative_pick(df, "id", "source", "split", "qa_mismatch")
+    for strategy, date_col in _SKEW_CASES:
+        negative_pick(df, "id", "source", "split", strategy, date_col=date_col)
     ids_after = set(tracker.getJobIdsForGroup() or [])
-    assert ids_after == ids_before, "auto salt policy must not run jobs at build"
-
-    # (b) identical rows to the unsalted plan for every strategy
-    key = lambda r: r["id"]
-    manual = N.negative_pick(df, "id", "source", "split", "qa_mismatch", salt_buckets=None)
-    assert sorted(auto.collect(), key=key) == sorted(manual.collect(), key=key)
-    for strategy, date_col in [
-        ("wrong_article", "datec"),
-        ("wrong_publication_date", "datec"),
-    ]:
-        salted_auto = N.negative_pick(
-            df, "id", "source", "split", strategy, date_col=date_col
-        )
-        unsalted = N.negative_pick(
-            df, "id", "source", "split", strategy, date_col=date_col, salt_buckets=None
-        )
-        assert sorted(salted_auto.collect(), key=key) == sorted(
-            unsalted.collect(), key=key
-        ), strategy
-
-    # explicit garbage string rejected loudly
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="salt_buckets"):
-        N.negative_pick(df, "id", "source", "split", "qa_mismatch", salt_buckets="yes")
+    assert ids_after == ids_before, "the salt policy must not run jobs at build"
